@@ -135,3 +135,19 @@ class IsolationForest:
         if (labels == -1).sum() == 0 and len(scores) > 1:
             labels[np.argmax(scores)] = -1
         return labels
+
+
+def fit_score_outliers(
+    X, contamination: float = 0.05, random_state: int | None = 42
+) -> tuple[np.ndarray, np.ndarray]:
+    """Fit a default forest on X and score X: (scores, outlier mask),
+    the mask marking scores above the ``1 - contamination`` quantile.
+    The one threshold rule of the streaming scorers; unlike
+    :meth:`IsolationForest.fit_predict` it has no tie fallback, so an
+    all-tied window flags nothing."""
+    scores = (
+        IsolationForest(contamination=contamination, random_state=random_state)
+        .fit(X)
+        .score_samples(X)
+    )
+    return scores, scores > np.quantile(scores, 1.0 - contamination)

@@ -14,9 +14,11 @@ Four families, all shuffle-conscious:
   Hamming distance. One explode + two aggregations, all JVM-side.
 
 Declared queries (registry): q_ngram_jaccard + q_embed_neardup carry
-DuckDB oracles; q_minhash_neardup + q_simhash_pairs are deterministic
-but not SQL-expressible → rows-only checks + unit tests vs the exact
-Jaccard baseline (tests/test_dedup.py).
+DuckDB oracles. The xxhash64 LSH queries (q_minhash_neardup,
+q_neardup_dedup, q_simhash_pairs, q_embed_neardup_lsh) are rows-only —
+DuckDB has no xxhash64 — and each runs the same function as an
+oracle-backed *_md5 twin that swaps in a hasher or plane matrix
+DuckDB can replay.
 """
 
 from __future__ import annotations
@@ -141,26 +143,33 @@ def shingle_arrays(
     )
 
 
+def _xxhash64(col, seed: int):
+    """The production per-shingle hasher: seeded xxhash64 (JVM codegen)."""
+    return F.xxhash64(col, F.lit(seed))
+
+
 def minhash_signatures_arr(
-    arr_df: DataFrame, id_col: str = "doc_id", num_hashes: int = 32
+    arr_df: DataFrame, id_col: str = "doc_id", num_hashes: int = 32, hasher=_xxhash64
 ) -> DataFrame:
     """MinHash signatures computed PER ROW from the shingle array:
     (id, sig array<bigint>) with ZERO shuffles.
 
-    min(xxhash64(s, i)) over a doc's shingles is insensitive to
+    min(hasher(s, i)) over a doc's shingles is insensitive to
     duplicate shingles, so no distinct/groupBy exchange is needed —
     each row computes its own signature inside whole-stage codegen.
-    Identical output to :func:`minhash_signatures` over
-    :func:`shingles` (pinned in tests/test_dedup.py)."""
+    With the default xxhash64 hasher the output is identical to
+    :func:`minhash_signatures` over :func:`shingles` (pinned in
+    tests/test_dedup.py); ``hasher=_md5_hash64`` is the cross-engine
+    hasher DuckDB can replay."""
     # Factory, NOT `lambda s, i=i`: pyspark passes (element, index) to a
     # 2-arg transform lambda, which would silently bind the seed to the
     # array position instead of the hash index.
-    def _hasher(seed):
-        return lambda s: F.xxhash64(s, F.lit(seed))
+    def _seeded(seed):
+        return lambda s: hasher(s, seed)
 
     sig = F.array(
         *[
-            F.array_min(F.transform("sharr", _hasher(i)))
+            F.array_min(F.transform("sharr", _seeded(i)))
             for i in range(num_hashes)
         ]
     )
@@ -322,10 +331,13 @@ def minhash_neardup_pairs(
     num_hashes: int = 32,
     bands: int = 8,
     threshold: float = 0.05,
+    hasher=_xxhash64,
 ) -> DataFrame:
     """MinHash-LSH candidates verified with exact Jaccard — the
     standard generate-and-verify near-dup pipeline. Verification cost
-    scales with the candidate set, never all-pairs.
+    scales with the candidate set, never all-pairs. ``hasher`` is the
+    per-shingle ``(col, seed) -> bigint`` hash of
+    :func:`minhash_signatures_arr`.
 
     Fully row-wise up to the banding self-join: the per-doc distinct
     shingle ARRAY (shingle_arrays) feeds zero-shuffle signatures
@@ -348,7 +360,7 @@ def minhash_neardup_pairs(
     if plan_size_bytes(df) <= 1 << 30:
         arr = arr.localCheckpoint(eager=True)
     cands = minhash_lsh_candidates(
-        minhash_signatures_arr(arr, id_col, num_hashes),
+        minhash_signatures_arr(arr, id_col, num_hashes, hasher),
         id_col,
         bands,
         num_hashes // bands,
@@ -442,21 +454,27 @@ def minhash_match_incremental(
 
 
 def simhash_fingerprints(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
+    df: DataFrame,
+    text_col: str = "text",
+    id_col: str = "doc_id",
+    hasher=F.xxhash64,
+    nbits: int = 64,
 ) -> DataFrame:
-    """64-bit SimHash per document, entirely with built-in expressions.
+    """``nbits``-bit SimHash per document, entirely with built-in
+    expressions.
 
-    Each distinct token hashes to 64 bits; every bit votes ±1; the
-    fingerprint's bit is 1 where the vote sum is positive. Explode is
-    tokens×64 rows — linear, shuffle-free until one groupBy."""
+    Each distinct token hashes to a bigint via ``hasher`` (col ->
+    bigint); each of its low ``nbits`` bits votes ±1; the fingerprint's
+    bit is 1 where the vote sum is positive. Explode is tokens×nbits
+    rows — linear, shuffle-free until one groupBy."""
     par = df.sparkSession.sparkContext.defaultParallelism
     df = df.repartition(par, id_col)  # parallelize single-file sources
     toks = df.select(
         id_col, F.explode(F.array_distinct(F.split(F.col(text_col), " "))).alias("tok")
-    ).withColumn("h", F.xxhash64("tok"))
+    ).withColumn("h", hasher(F.col("tok")))
     bits = toks.select(
         id_col,
-        F.explode(F.sequence(F.lit(0), F.lit(63))).alias("bit"),
+        F.explode(F.sequence(F.lit(0), F.lit(nbits - 1))).alias("bit"),
         F.col("h"),
     ).select(
         id_col,
@@ -945,13 +963,17 @@ def embed_lsh_candidates(
     df: DataFrame,
     vec_col: str = "embedding",
     id_col: str = "vec_id",
-    dim: int = 64,
+    planes=None,
     bands: int = 16,
     rows_per_band: int = 4,
-    seed: int = 42,
     max_bucket_size: int | None = None,
 ) -> DataFrame:
     """Candidate pairs from banded random-hyperplane LSH.
+
+    ``planes`` is the (bands·rows_per_band)×dim hyperplane matrix;
+    None draws 64-dim random-normal planes with seed 42. The oracle
+    twin passes ±1 planes (``_rademacher_planes``) that DuckDB can
+    replay as literals.
 
     Band i hashes the vector to a ``rows_per_band``-bit sign pattern
     over its own hyperplane slice; docs colliding in >=1 band are
@@ -966,7 +988,8 @@ def embed_lsh_candidates(
     random-collision floor 6%)."""
     from real_time_data_anomaly_detection_spark.operators import similarity
 
-    planes = similarity._hyperplanes(dim, bands * rows_per_band, seed)
+    if planes is None:
+        planes = similarity._hyperplanes(64, bands * rows_per_band, 42)
     v = F.col(vec_col).cast("array<double>")
     buckets = [
         F.struct(
@@ -1003,12 +1026,12 @@ def embed_neardup_lsh(
     vec_col: str = "embedding",
     id_col: str = "vec_id",
     threshold: float = 0.4,
-    dim: int = 64,
+    planes=None,
     bands: int = 16,
     rows_per_band: int = 4,
-    seed: int = 42,
 ) -> DataFrame:
-    """LSH-bucketed generate-and-verify near-dup.
+    """LSH-bucketed generate-and-verify near-dup (``planes`` as in
+    :func:`embed_lsh_candidates`).
 
     Candidates come from a band-join on hyperplane sign buckets (never
     all-pairs); exact cosine is computed ONLY for candidates by joining
@@ -1033,7 +1056,7 @@ def embed_neardup_lsh(
 
     spark = df.sparkSession
     par = spark.sparkContext.defaultParallelism
-    cands = embed_lsh_candidates(df, vec_col, id_col, dim, bands, rows_per_band, seed)
+    cands = embed_lsh_candidates(df, vec_col, id_col, planes, bands, rows_per_band)
     v = F.col(vec_col).cast("array<double>")
     vecs = df.select(F.col(id_col).alias("_id"), v.alias("_v"))
     va = vecs.select(F.col("_id").alias("vec_a"), F.col("_v").alias("_va"))
@@ -1265,13 +1288,16 @@ def neardup_dedup(
     num_hashes: int = 32,
     bands: int = 8,
     threshold: float = 0.5,
+    hasher=_xxhash64,
 ) -> DataFrame:
     """Corpus-level near-dup REMOVAL: MinHash-LSH pairs → connected
     components → keep the min-id document of every cluster (and every
     unpaired document). This is the step that turns pair DETECTION into
     an actual deduplicated corpus — transitive near-dups (A~B~C with
     A,C dissimilar) still collapse to one survivor."""
-    pairs = minhash_neardup_pairs(df, text_col, id_col, n, num_hashes, bands, threshold)
+    pairs = minhash_neardup_pairs(
+        df, text_col, id_col, n, num_hashes, bands, threshold, hasher
+    )
     comps = connected_components(pairs, "doc_a", "doc_b")
     keepers = comps.groupBy("comp").agg(F.min("node").alias(id_col)).select(id_col)
     clustered = comps.select(F.col("node").alias(id_col))
@@ -1334,6 +1360,19 @@ _MINHASH_MD5_CTES = """
             WHERE i::DOUBLE / (na.n + nb.n - i) >= 0.05)
 """
 
+#: ``comp``: the min-label transitive closure of the ``pairs`` graph —
+#: the shared prefix of the component-level md5 oracles (WITH RECURSIVE).
+_MINHASH_MD5_COMP = f"""{_MINHASH_MD5_CTES},
+        nodes AS (SELECT doc_a AS n FROM pairs UNION SELECT doc_b FROM pairs),
+        sym AS (SELECT doc_a AS src, doc_b AS dst FROM pairs
+                UNION ALL SELECT doc_b, doc_a FROM pairs),
+        reach(node, comp) AS (
+            SELECT n, n FROM nodes
+            UNION
+            SELECT e.dst, r.comp FROM reach r JOIN sym e ON e.src = r.node
+        ),
+        comp AS (SELECT node, min(comp) AS component FROM reach GROUP BY 1)"""
+
 
 @query(
     "q_minhash_neardup_md5",
@@ -1341,61 +1380,15 @@ _MINHASH_MD5_CTES = """
 )
 def q_minhash_neardup_md5(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash-LSH near-dup pairs with a CROSS-ENGINE hasher: the
-    whole banding/bucketing/candidate/exact-verify algebra replayed
-    in DuckDB and hash-compared — the declared xxhash64 pipeline
-    (q_minhash_neardup) can only be recall-tested because DuckDB has
-    no xxhash64; this twin (16 md5-derived hashes, 4 bands × 4 rows,
-    verify at j >= 0.05) proves the LSH mechanics themselves, not
-    just their recall. Same plan shape as the production path: per-row
-    signatures in codegen, bucket-local i<j pair explode, candidate-
-    bounded verify joins; md5 per shingle-hash is the (documented)
-    price of oracle parity, so this entry is the correctness witness,
-    not the perf path."""
+    production minhash_neardup_pairs run with the md5 hasher (16
+    hashes, 4 bands × 4 rows, verify at j >= 0.05), so its banding,
+    bucketing, candidate and exact-verify algebra is replayed in
+    DuckDB and hash-compared — DuckDB has no xxhash64, so the default
+    hasher (q_minhash_neardup) differs only in the hash function.
+    md5 per shingle-hash is the price of oracle parity: this entry is
+    the correctness witness, not the perf path."""
     d = load_table(spark, sf_dir, "documents")
-    return minhash_md5_pairs(d)
-
-
-def minhash_md5_pairs(d: DataFrame) -> DataFrame:
-    """The md5-hasher MinHash-LSH pair pipeline shared by
-    q_minhash_neardup_md5 and q_components_md5 (Spark twin of the
-    ``_MINHASH_MD5_CTES`` SQL). Same size-gated arr materialization as
-    minhash_neardup_pairs: the shingle-array relation feeds the
-    signature chain AND both verify sides, so below the 1 GB estimate
-    one localCheckpoint beats tokenizing the corpus three times
-    (round-13: measured 1.9 -> 1.4 s at sf0.1 across each of the five
-    md5-family consumers); above it, recompute wins."""
-    from real_time_data_anomaly_detection_spark.plans.inspect import plan_size_bytes
-
-    arr = shingle_arrays(d, n=3)
-    if plan_size_bytes(d) <= 1 << 30:
-        arr = arr.localCheckpoint(eager=True)
-    sig = F.array(
-        *[
-            F.array_min(F.transform("sharr", (lambda i: lambda s: _md5_hash64(s, i))(i)))
-            for i in range(16)
-        ]
-    )
-    banded = arr.select("doc_id", sig.alias("sig")).select(
-        "doc_id",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band"),
-                        F.concat_ws(
-                            "_", *[F.col("sig")[4 * b + r].cast("string") for r in range(4)]
-                        ).alias("key"),
-                    )
-                    for b in range(4)
-                ]
-            )
-        ).alias("bk"),
-    ).select("doc_id", "bk.band", "bk.key")
-    buckets = banded.groupBy("band", "key").agg(
-        F.sort_array(F.collect_set("doc_id")).alias("ids")
-    )
-    cands = _bucket_pairs(buckets).distinct()
-    return verify_candidates_arr(cands, arr, threshold=0.05)
+    return minhash_neardup_pairs(d, num_hashes=16, bands=4, hasher=_md5_hash64)
 
 
 @query(
@@ -1418,36 +1411,10 @@ def minhash_md5_pairs(d: DataFrame) -> DataFrame:
 )
 def q_simhash_md5(spark: SparkSession, sf_dir: str) -> DataFrame:
     """32-bit SimHash fingerprints with the cross-engine md5 hasher —
-    the oracle-backed correctness witness for the SimHash vote/bit
-    construction (the production 64-bit xxhash64 path is
-    q_simhash_pairs, recall-tested). Same plan: distinct-token
-    explode ×32 bits, one vote groupBy, one fingerprint groupBy."""
+    the production simhash_fingerprints vote/bit construction,
+    oracle-checked (q_simhash_pairs runs it with 64-bit xxhash64)."""
     d = load_table(spark, sf_dir, "documents")
-    par = spark.sparkContext.defaultParallelism
-    toks = (
-        d.repartition(par, "doc_id")
-        .select(
-            "doc_id",
-            F.explode(F.array_distinct(F.split(F.col("text"), " "))).alias("tok"),
-        )
-        .withColumn("h", _md5_hash64(F.col("tok"), 0))
-    )
-    bits = toks.select(
-        "doc_id",
-        F.explode(F.sequence(F.lit(0), F.lit(31))).alias("bit"),
-        "h",
-    ).select(
-        "doc_id", "bit", F.expr("(shiftright(h, bit) & 1) * 2 - 1").alias("vote")
-    )
-    votes = bits.groupBy("doc_id", "bit").agg(F.sum("vote").alias("v"))
-    return votes.groupBy("doc_id").agg(
-        F.sum(
-            F.expr(
-                "CASE WHEN v > 0 THEN shiftleft(CAST(1 AS BIGINT), bit) "
-                "ELSE CAST(0 AS BIGINT) END"
-            )
-        ).alias("simhash")
-    )
+    return simhash_fingerprints(d, hasher=lambda c: _md5_hash64(c, 0), nbits=32)
 
 
 def _rademacher_planes(n_planes: int = 32, dim: int = 64) -> list[list[int]]:
@@ -1472,7 +1439,7 @@ def _embed_lsh_md5_oracle(bands: int = 8, rows: int = 4, threshold: float = 0.3)
     keys = []
     for b in range(bands):
         bits = " + ".join(
-            f"((list_dot_product(v, [{', '.join(f'{c}.0' for c in planes[4 * b + r])}]) > 0)::INT << {r})"
+            f"((list_dot_product(v, [{', '.join(f'{c}.0' for c in planes[rows * b + r])}]) > 0)::INT << {r})"
             for r in range(rows)
         )
         keys.append(f"SELECT vec_id, {b} AS band, {bits} AS key FROM e")
@@ -1493,75 +1460,29 @@ def _embed_lsh_md5_oracle(bands: int = 8, rows: int = 4, threshold: float = 0.3)
 @query("q_embed_lsh_md5", oracle=_embed_lsh_md5_oracle())
 def q_embed_lsh_md5(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hyperplane-LSH embedding near-dup pairs with ORACLE-BACKED
-    banding: ±1 md5-derived hyperplanes are inlined as identical
-    literals on both engines, so the sign-pattern bucketing, the
-    bucket-local candidate generation, and the exact cosine verify
-    (>= 0.3) are all hash-checked — completing the oracle-proven LSH
-    set (MinHash q_minhash_neardup_md5, SimHash q_simhash_md5). The
-    production path with random-normal planes and multiprobe is
-    q_embed_neardup_lsh / q_ann_topk (recall-tested)."""
-    from real_time_data_anomaly_detection_spark.functions.vector import (
-        cosine_similarity,
-    )
-
-    bands, rows, threshold = 8, 4, 0.3
-    planes = _rademacher_planes(bands * rows)
+    banding: the production embed_neardup_lsh with ±1 md5-derived
+    hyperplanes, inlined as identical literals on both engines, so the
+    sign-pattern bucketing, candidate generation, and exact cosine
+    verify (>= 0.3) are all hash-checked — completing the
+    oracle-proven LSH set (MinHash q_minhash_neardup_md5, SimHash
+    q_simhash_md5). q_embed_neardup_lsh runs it with random-normal
+    planes."""
+    bands, rows = 8, 4
     d = load_table(spark, sf_dir, "embeddings")
-    v = F.col("embedding").cast("array<double>")
-
-    def dot(p):
-        lit = F.array(*[F.lit(float(c)) for c in p])
-        return F.aggregate(
-            F.zip_with(v, lit, lambda x, s: x * s), F.lit(0.0), lambda a, x: a + x
-        )
-
-    bandstructs = [
-        F.struct(
-            F.lit(b).alias("band"),
-            sum(
-                [(dot(planes[4 * b + r]) > 0).cast("int") * (1 << r) for r in range(rows)],
-                F.lit(0),
-            ).alias("key"),
-        )
-        for b in range(bands)
-    ]
-    banded = d.select(
-        F.col("vec_id"), F.explode(F.array(*bandstructs)).alias("bk")
-    ).select("vec_id", "bk.band", "bk.key")
-    buckets = banded.groupBy("band", "key").agg(
-        F.sort_array(F.collect_set("vec_id")).alias("ids")
-    )
-    cands = (
-        _bucket_pairs(buckets)
-        .withColumnRenamed("doc_a", "vec_a")
-        .withColumnRenamed("doc_b", "vec_b")
-        .distinct()
-    )
-    a = d.select(F.col("vec_id").alias("vec_a"), v.alias("va"))
-    b = d.select(F.col("vec_id").alias("vec_b"), v.alias("vb"))
-    cos = cosine_similarity(F.col("va"), F.col("vb"))
-    return (
-        cands.join(a, "vec_a")
-        .join(b, "vec_b")
-        .filter(cos >= threshold)
-        .select("vec_a", "vec_b", F.round(cos, 4).alias("cos_sim"))
+    return embed_neardup_lsh(
+        d,
+        threshold=0.3,
+        planes=_rademacher_planes(bands * rows),
+        bands=bands,
+        rows_per_band=rows,
     )
 
 
 @query(
     "q_components_md5",
     oracle=f"""
-        WITH RECURSIVE {_MINHASH_MD5_CTES},
-        nodes AS (SELECT doc_a AS n FROM pairs UNION SELECT doc_b FROM pairs),
-        sym AS (SELECT doc_a AS src, doc_b AS dst FROM pairs
-                UNION ALL SELECT doc_b, doc_a FROM pairs),
-        reach(node, comp) AS (
-            SELECT n, n FROM nodes
-            UNION
-            SELECT e.dst, r.comp FROM reach r JOIN sym e ON e.src = r.node
-        )
-        SELECT node AS doc_id, min(comp) AS component
-        FROM reach GROUP BY 1
+        WITH RECURSIVE {_MINHASH_MD5_COMP}
+        SELECT node AS doc_id, component FROM comp
     """,
 )
 def q_components_md5(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1576,7 +1497,7 @@ def q_components_md5(spark: SparkSession, sf_dir: str) -> DataFrame:
     (q_minhash_neardup, q_neardup_dedup) keep the recall/round-count
     tests."""
     d = load_table(spark, sf_dir, "documents")
-    pairs = minhash_md5_pairs(d)
+    pairs = minhash_neardup_pairs(d, num_hashes=16, bands=4, hasher=_md5_hash64)
     comp = connected_components(pairs, "doc_a", "doc_b")
     return comp.select(
         F.col("node").alias("doc_id"), F.col("comp").alias("component")
@@ -1586,16 +1507,7 @@ def q_components_md5(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "q_neardup_dedup_md5",
     oracle=f"""
-        WITH RECURSIVE {_MINHASH_MD5_CTES},
-        nodes AS (SELECT doc_a AS n FROM pairs UNION SELECT doc_b FROM pairs),
-        sym AS (SELECT doc_a AS src, doc_b AS dst FROM pairs
-                UNION ALL SELECT doc_b, doc_a FROM pairs),
-        reach(node, comp) AS (
-            SELECT n, n FROM nodes
-            UNION
-            SELECT e.dst, r.comp FROM reach r JOIN sym e ON e.src = r.node
-        ),
-        comp AS (SELECT node, min(comp) AS component FROM reach GROUP BY 1),
+        WITH RECURSIVE {_MINHASH_MD5_COMP},
         survivors AS (
             SELECT DISTINCT component AS doc_id FROM comp
             UNION ALL
@@ -1607,23 +1519,16 @@ def q_components_md5(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q_neardup_dedup_md5(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """END-TO-END near-dup removal on the md5 twin path, ORACLE-
-    BACKED: pairs -> connected components -> one survivor per cluster
-    (the min id — which IS the component label under min-label
-    propagation) plus every unpaired document. Extends
-    q_components_md5 one step further: not just the group closure but
-    the final KEEP/DROP decision per document is hash-compared
-    cross-engine. The production xxhash64 removal (q_neardup_dedup)
-    keeps its recall tests; this twin proves the survivor algebra."""
+    """END-TO-END near-dup removal, ORACLE-BACKED: the production
+    neardup_dedup (pairs -> connected components -> one survivor per
+    cluster plus every unpaired document) run with the md5 hasher.
+    Extends q_components_md5 one step further: not just the group
+    closure but the final KEEP/DROP decision per document is
+    hash-compared cross-engine. q_neardup_dedup runs the same code
+    with xxhash64 and threshold 0.5."""
     d = load_table(spark, sf_dir, "documents")
-    pairs = minhash_md5_pairs(d)
-    comp = connected_components(pairs, "doc_a", "doc_b")
-    keepers = comp.select(F.col("comp").alias("doc_id")).distinct()
-    clustered = comp.select(F.col("node").alias("doc_id"))
-    unpaired = d.select("doc_id").join(clustered, "doc_id", "left_anti")
-    survivors = keepers.unionByName(unpaired)
     return (
-        d.join(survivors, "doc_id", "left_semi")
+        neardup_dedup(d, num_hashes=16, bands=4, threshold=0.05, hasher=_md5_hash64)
         .select("doc_id", "lang", "source")
         .orderBy("doc_id")
     )
@@ -1632,16 +1537,7 @@ def q_neardup_dedup_md5(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "q_cluster_stats_md5",
     oracle=f"""
-        WITH RECURSIVE {_MINHASH_MD5_CTES},
-        nodes AS (SELECT doc_a AS n FROM pairs UNION SELECT doc_b FROM pairs),
-        sym AS (SELECT doc_a AS src, doc_b AS dst FROM pairs
-                UNION ALL SELECT doc_b, doc_a FROM pairs),
-        reach(node, comp) AS (
-            SELECT n, n FROM nodes
-            UNION
-            SELECT e.dst, r.comp FROM reach r JOIN sym e ON e.src = r.node
-        ),
-        comp AS (SELECT node, min(comp) AS component FROM reach GROUP BY 1),
+        WITH RECURSIVE {_MINHASH_MD5_COMP},
         csizes AS (SELECT component, count(*) AS cluster_size
                    FROM comp GROUP BY 1)
         SELECT cluster_size, count(*) AS n_clusters,
@@ -1662,7 +1558,7 @@ def q_cluster_stats_md5(spark: SparkSession, sf_dir: str) -> DataFrame:
     reductions over the LABEL relation (|clustered docs| rows, then
     |clusters| rows) — nothing corpus-sized past the closure."""
     d = load_table(spark, sf_dir, "documents")
-    pairs = minhash_md5_pairs(d)
+    pairs = minhash_neardup_pairs(d, num_hashes=16, bands=4, hasher=_md5_hash64)
     comp = connected_components(pairs, "doc_a", "doc_b")
     sizes = comp.groupBy("comp").agg(F.count(F.lit(1)).alias("cluster_size"))
     return (
@@ -1769,16 +1665,7 @@ def q_edit_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "q_split_leakage_safe",
     oracle=f"""
-        WITH RECURSIVE {_MINHASH_MD5_CTES},
-        nodes AS (SELECT doc_a AS n FROM pairs UNION SELECT doc_b FROM pairs),
-        sym AS (SELECT doc_a AS src, doc_b AS dst FROM pairs
-                UNION ALL SELECT doc_b, doc_a FROM pairs),
-        reach(node, comp) AS (
-            SELECT n, n FROM nodes
-            UNION
-            SELECT e.dst, r.comp FROM reach r JOIN sym e ON e.src = r.node
-        ),
-        comp AS (SELECT node, min(comp) AS component FROM reach GROUP BY 1),
+        WITH RECURSIVE {_MINHASH_MD5_COMP},
         grouped AS (
             SELECT d.doc_id, coalesce(c.component, d.doc_id) AS group_id
             FROM documents d LEFT JOIN comp c ON d.doc_id = c.node)
@@ -1817,7 +1704,7 @@ def q_split_leakage_safe(spark: SparkSession, sf_dir: str) -> DataFrame:
     at 100 TB this is the same shuffle budget as q_neardup_dedup plus
     one id-sized join."""
     d = load_table(spark, sf_dir, "documents")
-    pairs = minhash_md5_pairs(d)
+    pairs = minhash_neardup_pairs(d, num_hashes=16, bands=4, hasher=_md5_hash64)
     comp = connected_components(pairs, "doc_a", "doc_b")
     grouped = (
         d.select("doc_id")

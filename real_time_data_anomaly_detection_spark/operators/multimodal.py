@@ -1711,6 +1711,71 @@ def video_frame_dhash_cached(
     return spark.read.parquet(cache_path)
 
 
+def _index_match(
+    index_bands: DataFrame,
+    batch: DataFrame | None,
+    fps: DataFrame | None,
+    dhash_fn,
+    new_id: str,
+    extra_cols: tuple,
+    payload_col: str,
+    id_col: str,
+    max_hamming: int,
+    hash_w: int,
+    hash_h: int,
+    n_bands: int | None,
+    broadcast_batch: bool | None,
+    max_broadcast_bytes: int,
+    prune_keys_max: int,
+) -> DataFrame:
+    """The matcher core of image_index_match / video_index_match:
+    (idx_id, ``new_id``, *extra_cols, hamming ≤ max_hamming) for every
+    batch hash sharing a band with an indexed hash.
+
+    The batch side is ``fps`` (an already-materialized (id, *extra,
+    dhash) relation) or ``dhash_fn(batch, ...)``. One materialization
+    rule: a decode here takes the size-gated eager localCheckpoint
+    (decode once for the prune probe and the join; above 1 GB of batch
+    input recompute wins); caller-passed ``fps`` is used as is, never
+    re-materialized. The bk IN-list prune (_bk_prune_inlist) runs only
+    on a materialized hash relation — on an unmaterialized one the
+    probe would itself re-run the decode, and a batch that big blows
+    past prune_keys_max anyway. The band rows broadcast to the index
+    side below ``max_broadcast_bytes`` of batch input (above, a
+    shuffle join instead of an executor-OOM broadcast)."""
+    from real_time_data_anomaly_detection_spark.plans.inspect import plan_size_bytes
+
+    nbits = hash_w * hash_h
+    if n_bands is None:
+        n_bands = _default_bands(nbits, max_hamming)
+    size = plan_size_bytes(batch if batch is not None else fps)
+    if broadcast_batch is None:
+        broadcast_batch = size <= max_broadcast_bytes
+    materialized = fps is not None
+    if fps is None:
+        fps = dhash_fn(batch, payload_col, id_col, hash_w, hash_h)
+    fps = fps.filter(F.col("dhash").isNotNull())
+    if not materialized and size <= 1 << 30:
+        fps = fps.localCheckpoint(eager=True)
+        materialized = True
+    b = _band_fps(fps, id_col, nbits, n_bands, extra_cols).select(
+        F.col(id_col).alias(new_id), *extra_cols, F.col("dhash").alias("h_new"), "bk"
+    )
+    idx = index_bands.select(
+        F.col(id_col).alias("idx_id"), F.col("dhash").alias("h_idx"), "bk"
+    )
+    if materialized:
+        idx = _bk_prune_inlist(idx, b, prune_keys_max)
+    right = F.broadcast(b) if broadcast_batch else b
+    hamming = F.bit_count(F.col("h_idx").bitwiseXOR(F.col("h_new")))
+    return (
+        idx.join(right, "bk")
+        .select("idx_id", new_id, *extra_cols, hamming.alias("hamming"))
+        .distinct()
+        .filter(F.col("hamming") <= max_hamming)
+    )
+
+
 def video_index_match(
     index_bands: DataFrame,
     batch_videos: DataFrame | None,
@@ -1734,62 +1799,19 @@ def video_index_match(
     Because video_frame_dhash emits the SAME integer dHash the image
     path does (pinned frame-vs-direct-image bit-equality in
     tests/test_multimodal.py), frames enter the identical banded
-    algebra: the banding geometry MUST match the index's meta.json —
-    use load_image_index, which checks it loudly. Scale shape mirrors
-    image_index_match: frames decode ONCE in the Arrow worker onto a
-    localCheckpoint, only 8-byte hashes + band keys shuffle, the
-    micro-batch side broadcasts so the index relation never moves,
-    and when the batch holds ≤ ``prune_keys_max`` distinct band keys
-    they are pushed as a bk IN-list into the index scan — the
-    two-hop-keys trick over build_image_index's bk-sorted layout, so
-    per-trigger cost scales with the BATCH's frames, not the corpus
-    (the image ladder's flat 1.27→1.48 s row transfers verbatim).
+    algebra through the image_index_match core (_index_match): the
+    banding geometry MUST match the index's meta.json — use
+    load_image_index, which checks it loudly. Per-trigger cost scales
+    with the BATCH's frames, not the corpus.
 
     ``fps``: pass the already-materialized (id, frame_idx, dhash)
     relation (e.g. video_frame_dhash_cached) and the decode +
     localCheckpoint are skipped entirely; ``batch_videos`` may then
     be None and the broadcast valve sizes on the hash relation."""
-    from real_time_data_anomaly_detection_spark.plans.inspect import plan_size_bytes
-
-    nbits = hash_w * hash_h
-    if n_bands is None:
-        n_bands = _default_bands(nbits, max_hamming)
-    if broadcast_batch is None:
-        # the image twins' valve: micro-batches broadcast, a
-        # backfill-sized batch degrades to a shuffle join instead of
-        # an executor-OOM broadcast
-        broadcast_batch = plan_size_bytes(
-            batch_videos if batch_videos is not None else fps
-        ) <= max_broadcast_bytes
-    if fps is None:
-        fps = video_frame_dhash(
-            batch_videos, payload_col, id_col, hash_w, hash_h
-        ).filter(F.col("dhash").isNotNull())
-        fps = fps.localCheckpoint(eager=True)  # decode once: probe + join
-    else:
-        # caller materialized the hashes (parquet cache / checkpoint);
-        # a re-scan per use is cheap, no second materialization needed
-        fps = fps.filter(F.col("dhash").isNotNull())
-    b = _band_fps(fps, id_col, nbits, n_bands, extra_cols=("frame_idx",)).select(
-        F.col(id_col).alias("video_id"),
-        "frame_idx",
-        F.col("dhash").alias("h_new"),
-        "bk",
-    )
-    idx = index_bands.select(
-        F.col(id_col).alias("idx_id"), F.col("dhash").alias("h_idx"), "bk"
-    )
-    # two-hop prune probe reads the CHECKPOINTED/cached hashes — never
-    # a second decode (the image_index_match discipline); single-string
-    # IN-list construction via _bk_prune_inlist (round-13)
-    idx = _bk_prune_inlist(idx, b, prune_keys_max)
-    right = F.broadcast(b) if broadcast_batch else b
-    hamming = F.bit_count(F.col("h_idx").bitwiseXOR(F.col("h_new")))
-    return (
-        idx.join(right, "bk")
-        .select("idx_id", "video_id", "frame_idx", hamming.alias("hamming"))
-        .distinct()
-        .filter(F.col("hamming") <= max_hamming)
+    return _index_match(
+        index_bands, batch_videos, fps, video_frame_dhash, "video_id",
+        ("frame_idx",), payload_col, id_col, max_hamming, hash_w, hash_h,
+        n_bands, broadcast_batch, max_broadcast_bytes, prune_keys_max,
     )
 
 
@@ -2440,6 +2462,49 @@ def image_band_rows(
     return _band_fps(fps, id_col, nbits, n_bands)
 
 
+def _write_band_index(
+    fps: DataFrame,
+    index_path: str,
+    id_col: str,
+    hash_w: int,
+    hash_h: int,
+    n_bands: int | None,
+    max_hamming: int,
+    num_files: int,
+    extra_cols: tuple = (),
+) -> None:
+    """The band-index writer behind build_image_index /
+    build_video_index: the decodable rows of the (id, *extra_cols,
+    dhash) relation ``fps`` banded (_band_fps) and written to
+    ``index_path``/seed, range-partitioned and sorted by ``bk`` so an
+    incremental match's bk IN-list prunes parquet row groups; then the
+    banding geometry to ``index_path``/meta.json."""
+    import json as _json
+
+    from real_time_data_anomaly_detection_spark import fs as _fs
+
+    nbits = hash_w * hash_h
+    resolved = n_bands if n_bands is not None else _default_bands(
+        nbits, max_hamming
+    )
+    rows = _band_fps(
+        fps.filter(F.col("dhash").isNotNull()), id_col, nbits, resolved, extra_cols
+    )
+    rows.repartitionByRange(num_files, "bk").sortWithinPartitions(
+        "bk"
+    ).write.mode("overwrite").parquet(f"{index_path}/seed")
+    # meta.json is written AFTER the seed's _SUCCESS commit (readers
+    # gate on the marker, so a torn meta write is never authoritative);
+    # the Hadoop FS shim makes the index portable to hdfs://s3a://
+    _fs.write_text(
+        f"{index_path}/meta.json",
+        _json.dumps(
+            {"hash_w": hash_w, "hash_h": hash_h, "n_bands": resolved}
+        ),
+        fps.sparkSession,
+    )
+
+
 def build_image_index(
     images: DataFrame,
     index_path: str,
@@ -2472,29 +2537,9 @@ def build_image_index(
     different parameters would silently join almost nothing —
     ``check_image_index_meta`` turns that mismatch into a loud
     ValueError (image_ingest_stream checks before starting)."""
-    import json as _json
-
-    nbits = hash_w * hash_h
-    resolved = n_bands if n_bands is not None else _default_bands(
-        nbits, max_hamming
-    )
-    rows = image_band_rows(
-        images, payload_col, id_col, hash_w, hash_h, resolved, max_hamming
-    )
-    rows.repartitionByRange(num_files, "bk").sortWithinPartitions(
-        "bk"
-    ).write.mode("overwrite").parquet(f"{index_path}/seed")
-    from real_time_data_anomaly_detection_spark import fs as _fs
-
-    # meta.json is written AFTER the seed's _SUCCESS commit (readers
-    # gate on the marker, so a torn meta write is never authoritative);
-    # the Hadoop FS shim makes the index portable to hdfs://s3a://
-    _fs.write_text(
-        f"{index_path}/meta.json",
-        _json.dumps(
-            {"hash_w": hash_w, "hash_h": hash_h, "n_bands": resolved}
-        ),
-        images.sparkSession,
+    _write_band_index(
+        image_dhash(images, payload_col, id_col, hash_w, hash_h),
+        index_path, id_col, hash_w, hash_h, n_bands, max_hamming, num_files,
     )
 
 
@@ -2524,27 +2569,11 @@ def build_video_index(
     ``fps``: pass the already-materialized (id, frame_idx, dhash)
     relation (e.g. video_frame_dhash_cached) to seed without a
     second decode pass; ``videos`` may then be None."""
-    import json as _json
-
-    nbits = hash_w * hash_h
-    resolved = n_bands if n_bands is not None else _default_bands(
-        nbits, max_hamming
-    )
     if fps is None:
         fps = video_frame_dhash(videos, payload_col, id_col, hash_w, hash_h)
-    fps = fps.filter(F.col("dhash").isNotNull())
-    rows = _band_fps(fps, id_col, nbits, resolved, extra_cols=("frame_idx",))
-    rows.repartitionByRange(num_files, "bk").sortWithinPartitions(
-        "bk"
-    ).write.mode("overwrite").parquet(f"{index_path}/seed")
-    from real_time_data_anomaly_detection_spark import fs as _fs
-
-    _fs.write_text(
-        f"{index_path}/meta.json",
-        _json.dumps(
-            {"hash_w": hash_w, "hash_h": hash_h, "n_bands": resolved}
-        ),
-        fps.sparkSession,
+    _write_band_index(
+        fps, index_path, id_col, hash_w, hash_h, n_bands, max_hamming,
+        num_files, extra_cols=("frame_idx",),
     )
 
 
@@ -2632,46 +2661,17 @@ def image_index_match(
     keys they are pushed as a bk IN-list into the index scan — the
     two-hop-keys trick: because build_image_index sorted by bk,
     parquet row-group stats skip everything the batch can't touch, so
-    per-trigger cost scales with the BATCH, not the corpus.
+    per-trigger cost scales with the BATCH, not the corpus. The
+    materialization rule lives in :func:`_index_match`.
 
     Obtain ``index_bands`` via :func:`load_image_index` — it runs the
     check_image_index_meta geometry guard before reading; a raw
     ``spark.read.parquet`` of a mismatched index silently matches
     (almost) nothing here."""
-    from real_time_data_anomaly_detection_spark.plans.inspect import plan_size_bytes
-
-    nbits = hash_w * hash_h
-    if n_bands is None:
-        n_bands = _default_bands(nbits, max_hamming)
-    if broadcast_batch is None:
-        broadcast_batch = plan_size_bytes(batch_images) <= max_broadcast_bytes
-    fps = image_dhash(batch_images, payload_col, id_col, hash_w, hash_h).filter(
-        F.col("dhash").isNotNull()
-    )
-    small = plan_size_bytes(batch_images) <= 1 << 30
-    if small:
-        fps = fps.localCheckpoint(eager=True)
-    b = _band_fps(fps, id_col, nbits, n_bands).select(
-        F.col(id_col).alias("new_id"), F.col("dhash").alias("h_new"), "bk"
-    )
-    idx = index_bands.select(
-        F.col(id_col).alias("idx_id"), F.col("dhash").alias("h_idx"), "bk"
-    )
-    if small:
-        # two-hop prune probe reads the CHECKPOINTED hashes — never a
-        # second decode; for un-checkpointed backfill batches the probe
-        # would itself re-run the decode, and a batch that big would
-        # blow past prune_keys_max anyway, so skip it entirely.
-        # Single-string IN-list construction via _bk_prune_inlist
-        # (round-13: isin(list) cost ~1.1 ms/key of driver time)
-        idx = _bk_prune_inlist(idx, b, prune_keys_max)
-    right = F.broadcast(b) if broadcast_batch else b
-    hamming = F.bit_count(F.col("h_idx").bitwiseXOR(F.col("h_new")))
-    return (
-        idx.join(right, "bk")
-        .select("idx_id", "new_id", hamming.alias("hamming"))
-        .distinct()
-        .filter(F.col("hamming") <= max_hamming)
+    return _index_match(
+        index_bands, batch_images, None, image_dhash, "new_id", (),
+        payload_col, id_col, max_hamming, hash_w, hash_h, n_bands,
+        broadcast_batch, max_broadcast_bytes, prune_keys_max,
     )
 
 
@@ -3098,32 +3098,34 @@ def q_image_ahash_md5(spark, sf_dir: str) -> DataFrame:
     return out.localCheckpoint(eager=False).orderBy("doc_id")
 
 
-def _image_index_path(sf_dir: str) -> str:
-    """Session-cache image-index dir keyed by the documents corpus
-    fingerprint (io.corpus_cache_path — shared staleness contract)."""
+def _media_index_seed(spark, sf_dir: str, synth, build, prefix: str):
+    """(index seed relation, batch): a build-once-per-(corpus, session)
+    persisted index (``build``: build_image_index / build_video_index)
+    over the CORPUS half of the media ``synth`` makes (doc_id % 10 ∈ {0, 1} —
+    every even base quintuple has 2 corpus + 3 batch members, every odd
+    quintuple is batch-only: both the index-hit and intra-batch paths
+    exercised at every SF), keyed by the documents corpus fingerprint
+    (io.corpus_cache_path), and the BATCH half UNDECODED: every query
+    invocation pays its own batch decode (the persisted artifact is the
+    INDEX — the feature under test — not a cross-run cache of decode
+    output).
+
+    The halves are filtered BEFORE synthesis: the video synth is a
+    mapInPandas, opaque to Catalyst, so a filter above it cannot push
+    down and every invocation synthesized ALL docs' videos only to drop
+    the corpus half (round-14; synthesis is per-doc row-wise, so
+    filtering the id relation first yields the identical payload
+    rows)."""
+    from real_time_data_anomaly_detection_spark import fs as _fs
     from real_time_data_anomaly_detection_spark.io import corpus_cache_path
 
-    return corpus_cache_path(sf_dir, "documents", "imgidx")
-
-
-def _img_index_seed(spark, sf_dir: str) -> tuple[str, DataFrame]:
-    """Build-once-per-(corpus, session) persisted image index over the
-    CORPUS half of the synthetic images (doc_id % 10 ∈ {0, 1} — so
-    every even base-image quintuple has 2 corpus + 3 batch members and
-    every odd quintuple is batch-only, exercising both the index-hit
-    and the intra-batch paths), and the BATCH half as a DataFrame."""
-    from real_time_data_anomaly_detection_spark import fs as _fs
-
     d = load_table(spark, sf_dir, "documents")
-    img = _synth_doc_images(d)
-    corpus = img.filter(F.col("doc_id") % 10 <= 1)
-    batch = img.filter(F.col("doc_id") % 10 >= 2)
-    path = _image_index_path(sf_dir)
+    corpus = synth(d.filter(F.col("doc_id") % 10 <= 1))
+    batch = synth(d.filter(F.col("doc_id") % 10 >= 2))
+    path = corpus_cache_path(sf_dir, "documents", prefix)
     if not _fs.exists(path + "/seed/_SUCCESS", spark):
-        build_image_index(
-            corpus, path, "payload", "doc_id", hash_w=8, hash_h=7, n_bands=4
-        )
-    return path, batch
+        build(corpus, path, "payload", "doc_id", hash_w=8, hash_h=7, n_bands=4)
+    return spark.read.parquet(f"{path}/seed"), batch
 
 
 @query(
@@ -3148,8 +3150,9 @@ def q_image_index_md5(spark, sf_dir: str) -> DataFrame:
     dHash + banding in DuckDB and joins the two halves directly — a
     hash-match proves the PERSISTED path returns exactly what the
     inline pair search would, the index == inline discipline."""
-    path, batch = _img_index_seed(spark, sf_dir)
-    idx = spark.read.parquet(f"{path}/seed")
+    idx, batch = _media_index_seed(
+        spark, sf_dir, _synth_doc_images, build_image_index, "imgidx"
+    )
     pairs = image_index_match(
         idx, batch, "payload", "doc_id", max_hamming=3, hash_w=8, hash_h=7,
         n_bands=4,
@@ -3192,8 +3195,9 @@ def q_image_ingest_admit_md5(spark, sf_dir: str) -> DataFrame:
     their min-id member survives the intra-batch rule — both paths
     exercised at every SF. The oracle replays the full decode → dHash
     → banding → double NOT EXISTS in DuckDB."""
-    path, batch = _img_index_seed(spark, sf_dir)
-    idx = spark.read.parquet(f"{path}/seed")
+    idx, batch = _media_index_seed(
+        spark, sf_dir, _synth_doc_images, build_image_index, "imgidx"
+    )
     admitted = image_neardup_admit(
         idx, batch, "payload", "doc_id", max_hamming=3, hash_w=8, hash_h=7,
         n_bands=4,
@@ -3513,41 +3517,6 @@ def q_video_dhash_md5(spark, sf_dir: str) -> DataFrame:
     return out.localCheckpoint(eager=False).orderBy("doc_id", "frame_idx")
 
 
-def _video_index_path(sf_dir: str) -> str:
-    """Session-cache video-index dir keyed by the documents corpus
-    fingerprint (io.corpus_cache_path — shared staleness contract)."""
-    from real_time_data_anomaly_detection_spark.io import corpus_cache_path
-
-    return corpus_cache_path(sf_dir, "documents", "vididx")
-
-
-def _vid_index_seed(spark, sf_dir: str) -> tuple[str, DataFrame]:
-    """Build-once-per-(corpus, session) persisted seen-frame index over
-    the CORPUS half of the synthetic videos (doc_id % 10 ∈ {0, 1} —
-    every even base quintuple has 2 corpus + 3 batch members, every odd
-    quintuple is batch-only: both the index-hit and intra-batch paths
-    exercised at every SF), and the BATCH half as a DataFrame. The
-    batch half is returned UNDECODED: every query invocation pays its
-    own batch decode (the persisted artifact is the INDEX — the
-    feature under test — not a cross-run cache of decode output)."""
-    from real_time_data_anomaly_detection_spark import fs as _fs
-
-    d = load_table(spark, sf_dir, "documents")
-    # Filter the halves BEFORE synthesis: mapInPandas is opaque to
-    # Catalyst, so a filter above it cannot push down and every
-    # invocation synthesized ALL docs' videos only to drop the corpus
-    # half (round-14; synthesis is per-doc row-wise, so filtering the
-    # id relation first yields the identical payload rows).
-    corpus = _synth_doc_videos(d.filter(F.col("doc_id") % 10 <= 1))
-    batch = _synth_doc_videos(d.filter(F.col("doc_id") % 10 >= 2))
-    path = _video_index_path(sf_dir)
-    if not _fs.exists(path + "/seed/_SUCCESS", spark):
-        build_video_index(
-            corpus, path, "payload", "doc_id", hash_w=8, hash_h=7, n_bands=4
-        )
-    return path, batch
-
-
 @query(
     "q_video_index_md5",
     oracle=f"""{_VID_DHASH_CTES}
@@ -3572,8 +3541,9 @@ def q_video_index_md5(spark, sf_dir: str) -> DataFrame:
     a hash match proves the PERSISTED path returns exactly what an
     inline frame join would, q_image_index_md5's index == inline
     discipline at frame granularity."""
-    path, batch = _vid_index_seed(spark, sf_dir)
-    idx = spark.read.parquet(f"{path}/seed")
+    idx, batch = _media_index_seed(
+        spark, sf_dir, _synth_doc_videos, build_video_index, "vididx"
+    )
     pairs = video_index_match(
         idx, batch, "payload", "doc_id", max_hamming=3, hash_w=8, hash_h=7,
         n_bands=4,
@@ -3628,8 +3598,9 @@ def q_video_ingest_admit_md5(spark, sf_dir: str) -> DataFrame:
     2·covered ≤ n_frames admits the exactly-half-covered even-n case
     the production rule rejects — replicate the rule, don't
     re-derive it)."""
-    path, batch = _vid_index_seed(spark, sf_dir)
-    idx = spark.read.parquet(f"{path}/seed")
+    idx, batch = _media_index_seed(
+        spark, sf_dir, _synth_doc_videos, build_video_index, "vididx"
+    )
     admitted = video_neardup_admit(
         idx, batch, "payload", "doc_id", max_hamming=3, min_frac=0.5,
         hash_w=8, hash_h=7, n_bands=4,

@@ -21,7 +21,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from real_time_data_anomaly_detection_spark.functions.iforest import IsolationForest
+from real_time_data_anomaly_detection_spark.functions.iforest import fit_score_outliers
 from real_time_data_anomaly_detection_spark.schemas import PLANT_FEATURES
 
 
@@ -72,16 +72,11 @@ def score_anomalies(
         if len(complete) < min_rows:
             return pdf[out_cols]
         complete = complete.sort_values([ts_col] + features, kind="mergesort")
-        X = complete[features].astype(float).to_numpy()
-        model = IsolationForest(
-            contamination=contamination, random_state=random_state
-        ).fit(X)
-        scores = model.score_samples(X)
         import numpy as np
 
-        threshold = np.quantile(scores, 1.0 - contamination)
-        labels = np.where(scores > threshold, -1, 1)
-        pdf.loc[complete.index, "anomaly"] = labels
+        X = complete[features].astype(float).to_numpy()
+        scores, is_out = fit_score_outliers(X, contamination, random_state)
+        pdf.loc[complete.index, "anomaly"] = np.where(is_out, -1, 1)
         pdf.loc[complete.index, "score"] = scores
         return pdf[out_cols]
 

@@ -128,20 +128,14 @@ def last_n_window(
         if len(complete) < min_rows:  # warm-up guard (app/app3_ML.py:151-152)
             return
         complete = complete.sort_values([ts_col] + features, kind="mergesort")
-        import numpy as np
-
         from real_time_data_anomaly_detection_spark.functions.iforest import (
-            IsolationForest,
+            fit_score_outliers,
         )
 
         X = complete[features].astype(float).to_numpy()
-        model = IsolationForest(
-            contamination=contamination, random_state=random_state
-        ).fit(X)
-        scores = model.score_samples(X)
-        threshold = np.quantile(scores, 1.0 - contamination)
-        out = complete.loc[scores > threshold].copy()
-        out["score"] = scores[scores > threshold]
+        scores, is_out = fit_score_outliers(X, contamination, random_state)
+        out = complete.loc[is_out].copy()
+        out["score"] = scores[is_out]
         # Only surface outliers from rows that arrived this trigger:
         # windowed rescoring would otherwise re-emit old rows each batch.
         out = out[out["_is_new"]]

@@ -5,6 +5,7 @@ from __future__ import annotations
 
 from tests.conftest import finish
 
+import pytest
 from pyspark.sql import functions as F
 
 from real_time_data_anomaly_detection_spark.operators.dedup import (
@@ -538,14 +539,17 @@ def test_leakage_safe_split_properties(spark):
     from real_time_data_anomaly_detection_spark.io import load_table
     from real_time_data_anomaly_detection_spark.operators import REGISTRY
     from real_time_data_anomaly_detection_spark.operators.dedup import (
-        minhash_md5_pairs,
+        _md5_hash64,
+        minhash_neardup_pairs,
     )
 
     sf = "/root/testdata/sf0.01"
     assign = REGISTRY["q_split_leakage_safe"].spark_fn(spark, sf).cache()
     split_of = {r["doc_id"]: r["split"] for r in assign.collect()}
 
-    pairs = minhash_md5_pairs(load_table(spark, sf, "documents")).collect()
+    pairs = minhash_neardup_pairs(
+        load_table(spark, sf, "documents"), num_hashes=16, bands=4, hasher=_md5_hash64
+    ).collect()
     assert len(pairs) > 0
     crossing = [
         (p["doc_a"], p["doc_b"])
@@ -596,3 +600,29 @@ def test_containment_posting_cap(spark):
     # -> containment 3/min(3,6) = 1.0
     assert set(capped) == {(100, 101)}
     assert abs(capped[(100, 101)] - 1.0) < 1e-9
+
+
+# (rows, sha256 of the sorted row reprs) at sf0.001 — recorded before the
+# hasher / plane-matrix parameters existed; their defaults must not move
+# the production rows.
+_PROD_ROW_PINS = {
+    "q_minhash_neardup": (28, "5c16fe3c15068592ebad1a2198ef57071736a6df1bb2dcca3eec8167dc3ffda4"),
+    "q_neardup_dedup": (476, "210c547de7fb31fa630677126b468fbfb7a05700c6d7cda770a9da4d37e9d36d"),
+    "q_simhash_pairs": (8985, "a16e73f7faf5ca3ab1ad811cb12c65a1a83bda68249b1aeff2bd0d3ed19b1179"),
+    "q_embed_neardup_lsh": (64, "397db8fb4c7841123f8c258dc03ae82a946d349a413a6de7a58595de212456c2"),
+}
+
+
+@pytest.mark.parametrize("name", sorted(_PROD_ROW_PINS))
+def test_production_lsh_rows_pinned(spark, name):
+    """The rows-only xxhash64 LSH queries return their pinned rows."""
+    import hashlib
+
+    from real_time_data_anomaly_detection_spark.operators import REGISTRY
+    from tests.conftest import SF_DIR
+
+    rows = REGISTRY[name].spark_fn(spark, SF_DIR).collect()
+    digest = hashlib.sha256(
+        "\n".join(sorted(repr(tuple(r)) for r in rows)).encode()
+    ).hexdigest()
+    assert (len(rows), digest) == _PROD_ROW_PINS[name]

@@ -2193,6 +2193,67 @@ def test_video_index_match_cross_media(spark, tmp_path):
     ]
 
 
+def test_index_match_above_gate_recomputes(spark, tmp_path, monkeypatch):
+    """The index-match core's above-gate branch: when the batch input
+    estimate is over 1 GB the decoded hashes are NOT checkpointed (no
+    ExistingRDD in the plan; the bk prune and the broadcast are skipped
+    too), and image and video matches return the same rows as the
+    gated path."""
+    import numpy as np
+
+    from real_time_data_anomaly_detection_spark.operators.multimodal import (
+        build_image_index,
+        image_index_match,
+        load_image_index,
+        video_index_match,
+    )
+    from real_time_data_anomaly_detection_spark.plans import inspect
+
+    fr, _ = _mjpeg_test_frames(n=5)
+    a, b, c, d, e = fr
+    rng = np.random.RandomState(5)
+    px = rng.randint(0, 256, 360, dtype=np.int64).astype(np.uint8)
+    near = px.copy()
+    near[:3] = np.minimum(near[:3].astype(np.int64) + 6, 255)
+    idx_path = str(tmp_path / "imgidx")
+    build_image_index(
+        spark.createDataFrame(
+            [(100, d), (101, e), (102, _ppm(12, 10, px.tolist()))],
+            "media_id long, payload binary",
+        ),
+        idx_path,
+    )
+    idx = load_image_index(spark, idx_path)
+    # file-backed batches: in-memory relations estimate as unknown
+    # (Long.MaxValue) and would take the recompute branch anyway
+    spark.createDataFrame(
+        [(1, d), (2, _ppm(12, 10, near.tolist())), (3, a)],
+        "media_id long, payload binary",
+    ).write.parquet(str(tmp_path / "imgs"))
+    spark.createDataFrame(
+        [(1, _avi_bytes([a, b, c])), (2, _mov_bytes([b, c, d]))],
+        "media_id long, payload binary",
+    ).write.parquet(str(tmp_path / "vids"))
+    imgs = spark.read.parquet(str(tmp_path / "imgs"))
+    vids = spark.read.parquet(str(tmp_path / "vids"))
+
+    def run():
+        out = []
+        for q in (image_index_match(idx, imgs), video_index_match(idx, vids)):
+            plan = q._jdf.queryExecution().executedPlan().toString()
+            out.append(("ExistingRDD" in plan, sorted(map(tuple, q.collect()))))
+        return out
+
+    gated = run()
+    monkeypatch.setattr(inspect, "plan_size_bytes", lambda df: 2 << 30)
+    above = run()
+    assert [m for m, _ in gated] == [True, True]
+    assert [m for m, _ in above] == [False, False]
+    assert [r for _, r in above] == [r for _, r in gated]
+    assert gated[1][1] == [(100, 2, 2, 0)]
+    assert {(i, n) for i, n, _ in gated[0][1]} == {(100, 1), (102, 2)}
+
+
 def test_null_cobatched_hashes_stay_exact(spark):
     """Round-11 corruption regression: an undecodable payload in the
     SAME Arrow chunk as decodable ones must not disturb the good

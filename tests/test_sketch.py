@@ -89,6 +89,29 @@ def test_hll_over_distinct_equals_over_raw(spark):
     assert [(r.g, r.hll_est) for r in raw] == [(r.g, r.hll_est) for r in dis]
 
 
+def test_hll_md5_exact_side_skips_null_keys(spark, tmp_path):
+    """q_hll_md5's exact_nd is count(DISTINCT l_partkey), which skips
+    NULL keys — a NULL partkey in the shared distinct relation must not
+    count as one more distinct value."""
+    from real_time_data_anomaly_detection_spark.operators import REGISTRY
+
+    rows = [("A", 1), ("A", 1), ("A", 2), ("A", None), ("N", None), ("N", None),
+            ("N", 3), ("R", None)]
+    li = spark.createDataFrame(rows, "l_returnflag string, l_partkey bigint")
+    li.write.parquet(str(tmp_path / "lineitem.parquet"))
+    got = {
+        r.l_returnflag: r.exact_nd
+        for r in REGISTRY["q_hll_md5"].spark_fn(spark, str(tmp_path)).collect()
+    }
+    want = {
+        r.l_returnflag: r.nd
+        for r in li.groupBy("l_returnflag")
+        .agg(F.countDistinct("l_partkey").alias("nd"))
+        .collect()
+    }
+    assert got == want == {"A": 2, "N": 1, "R": 0}
+
+
 def test_cms_partition_invariance(spark):
     items = _zipf_items(spark)
     probes = items.select("item").distinct()
