@@ -21,6 +21,10 @@ from pyspark.sql import functions as F
 
 from real_time_data_anomaly_detection_spark.io import load_table
 from real_time_data_anomaly_detection_spark.operators.registry import query
+from real_time_data_anomaly_detection_spark.plans.inspect import (
+    broadcast_if_small,
+    checkpoint_if_small,
+)
 
 
 # ---------------------------------------------------------------------------
@@ -264,16 +268,10 @@ def exact_substring_dedup(
     # grams feeds TWO subplans (the duplicated-digest aggregate and the
     # dup_starts flag-back join), and the gram computation itself is
     # narrow — no exchange for Spark to reuse — so without
-    # materialization the tokenize + slice + sha2 pass runs twice.
-    # Below a 1 GB input estimate, localCheckpoint once (measured
-    # 2.5 -> 1.9 s at sf0.1); above, recompute wins — a corpus-sized
-    # gram materialization (LARGER than the corpus: ~one digest row
-    # per token) costs more storage traffic than a second codegen'd
-    # scan. Same gate as dedup.minhash_neardup_pairs' arr relation.
-    from real_time_data_anomaly_detection_spark.plans.inspect import plan_size_bytes
-
-    if plan_size_bytes(df) <= 1 << 30:
-        grams = grams.localCheckpoint(eager=True)
+    # materialization the tokenize + slice + sha2 pass runs twice
+    # (checkpointed: 2.5 -> 1.9 s at sf0.1). The gram relation is
+    # LARGER than the corpus (~one digest row per token).
+    grams = checkpoint_if_small(grams, df)
     dup = (
         grams.groupBy("_dig")
         .agg(F.count(F.lit(1)).alias("_c"))
@@ -1010,12 +1008,7 @@ def q_quality_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Merge / upsert
 
 
-def merge_upsert(
-    target: DataFrame,
-    updates: DataFrame,
-    key_col: str,
-    broadcast_keys: bool = True,
-) -> DataFrame:
+def merge_upsert(target: DataFrame, updates: DataFrame, key_col: str) -> DataFrame:
     """Upsert ``updates`` into ``target`` on ``key_col``: rows whose
     key exists in updates are replaced, new keys are appended,
     untouched target rows pass through. Column sets must match.
@@ -1023,13 +1016,15 @@ def merge_upsert(
     This is the relational core of MERGE INTO / CDC compaction. Scale
     shape: the typical change batch is orders of magnitude smaller
     than the canonical table, so the anti-join probes a BROADCAST key
-    set — the 100 TB target is never reshuffled, and the union is a
+    set — the target is not reshuffled, and the union is a
     metadata-only concatenation. (On a table format with partition
     pruning, the same plan rewrites only partitions containing update
-    keys.) For a change batch too large to broadcast, pass
-    ``broadcast_keys=False`` and both sides shuffle on the key —
-    still one exchange each (mirrors segment_dedup's
-    ``broadcast_dups`` pattern).
+    keys.) The broadcast goes through plans.inspect.broadcast_if_small
+    on the key set's own estimate: above 64 MB both sides shuffle on
+    the key instead — still one exchange each. Without CBO a filter
+    does not shrink that estimate, so a change batch filtered from a
+    scan is sized as if unfiltered (q_merge_upsert's key set: 1.09 MB
+    at sf0.1, shuffling the target from about sf6).
     """
     cols = target.columns
     if set(updates.columns) != set(cols):
@@ -1045,9 +1040,7 @@ def merge_upsert(
     # ``latest`` instead, where the re-inlined work includes the
     # latest-wins window (measured win there).
     keys = updates.select(key_col).distinct()
-    untouched = target.join(
-        F.broadcast(keys) if broadcast_keys else keys, key_col, "left_anti"
-    )
+    untouched = target.join(broadcast_if_small(keys, keys), key_col, "left_anti")
     return untouched.select(cols).unionByName(updates.select(cols))
 
 
@@ -1212,7 +1205,9 @@ def q_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Upsert a synthetic change batch into orders: every 97th key is
     an in-place price/status update, every 101st key re-appears as a
     fresh insert under a shifted key. Broadcast-anti + union — the
-    canonical table is never reshuffled.
+    canonical table is not reshuffled while the key set's estimate
+    stays within the 64 MB broadcast valve (up to about sf6; see
+    merge_upsert).
 
     Prices run in exact integer CENTS (round(p*100) recovers the
     stored 2-dp value exactly) and the 1.1× update is integer half-up
@@ -1329,7 +1324,6 @@ def cdc_apply(
     key_col: str,
     op_col: str = "op",
     seq_col: str = "seq",
-    broadcast_keys: bool = True,
 ) -> DataFrame:
     """Apply a CDC change batch to a snapshot: per key, the
     HIGHEST-``seq_col`` change wins ('upsert' replaces-or-appends the
@@ -1340,8 +1334,10 @@ def cdc_apply(
 
     Scale shape: latest-wins is one window pass over the CHANGE BATCH
     (never the snapshot); the snapshot is touched by exactly one
-    anti-join against the (broadcast by default) changed-key set —
-    the 100 TB target is never reshuffled. ``changes`` carries the
+    anti-join against the changed-key set, broadcast while its
+    estimate is within plans.inspect.broadcast_if_small's 64 MB valve
+    (q_cdc_apply: 0.31 MB at sf0.1) so the target is not reshuffled;
+    above it both sides shuffle on the key. ``changes`` carries the
     target's columns plus (op, seq); delete rows may leave the
     payload columns null.
 
@@ -1370,18 +1366,12 @@ def cdc_apply(
     )
     # ``latest`` feeds TWO consumers (changed-key set + the upsert
     # branch) and each re-inlined the whole change derivation AND its
-    # latest-wins window (q_cdc_apply: 13 snapshot scans). Below the
-    # house 1 GB estimate, materialize the compacted batch once —
-    # it is change-batch-sized by construction (round-14).
-    from real_time_data_anomaly_detection_spark.plans.inspect import plan_size_bytes
-
-    if plan_size_bytes(changes) <= 1 << 30:
-        latest = latest.localCheckpoint(eager=True)
+    # latest-wins window (q_cdc_apply: 13 snapshot scans), so the
+    # compacted batch is materialized once (round-14).
+    latest = checkpoint_if_small(latest, changes)
     changed_keys = latest.select(key_col)
     untouched = target.join(
-        F.broadcast(changed_keys) if broadcast_keys else changed_keys,
-        key_col,
-        "left_anti",
+        broadcast_if_small(changed_keys, changed_keys), key_col, "left_anti"
     )
     upserts = latest.filter(F.col(op_col) == "upsert").select(cols)
     return untouched.select(cols).unionByName(upserts)

@@ -29,6 +29,7 @@ from pyspark.sql import functions as F
 from real_time_data_anomaly_detection_spark.functions.vector import cosine_similarity
 from real_time_data_anomaly_detection_spark.io import load_table
 from real_time_data_anomaly_detection_spark.operators.registry import query
+from real_time_data_anomaly_detection_spark.plans.inspect import checkpoint_if_small
 
 
 def exact_dedup(df: DataFrame, cols: list[str], keep_col: str) -> DataFrame:
@@ -349,16 +350,10 @@ def minhash_neardup_pairs(
     → ~1 s at sf0.1 on local[32].
 
     The arr relation feeds three subplans (signatures + both verify
-    sides). Below a 1 GB input estimate it is localCheckpoint-ed —
-    materializing once beats tokenizing three times (measured 1.8 →
-    1.3 s at sf0.1); above, recompute wins (a corpus-sized
-    materialization costs more storage traffic than three codegen'd
-    scans, and the exchange under it is already reused)."""
-    arr = shingle_arrays(df, text_col, id_col, n)
-    from real_time_data_anomaly_detection_spark.plans.inspect import plan_size_bytes
-
-    if plan_size_bytes(df) <= 1 << 30:
-        arr = arr.localCheckpoint(eager=True)
+    sides), so it goes through the house size gate
+    (plans.inspect.checkpoint_if_small) — materializing once beats
+    tokenizing three times (measured 1.8 → 1.3 s at sf0.1)."""
+    arr = checkpoint_if_small(shingle_arrays(df, text_col, id_col, n), df)
     cands = minhash_lsh_candidates(
         minhash_signatures_arr(arr, id_col, num_hashes, hasher),
         id_col,
@@ -791,13 +786,8 @@ def prefix_filter_jaccard(
     filtering + array-intersect verification: IDENTICAL results to the
     all-pairs exact join (the oracle replays that), with candidate
     cost bounded by prefix-posting sizes instead of full postings."""
-    arr = shingle_arrays(df, text_col, id_col, n)
-    # same size-gated materialization as minhash_neardup_pairs: arr
-    # feeds candidate generation AND both verify sides
-    from real_time_data_anomaly_detection_spark.plans.inspect import plan_size_bytes
-
-    if plan_size_bytes(df) <= 1 << 30:
-        arr = arr.localCheckpoint(eager=True)
+    # arr feeds candidate generation AND both verify sides
+    arr = checkpoint_if_small(shingle_arrays(df, text_col, id_col, n), df)
     cands = prefix_filter_candidates(arr, id_col, threshold)
     # The candidate relation is BYTE-small (two ids/row) but each row
     # buys an array_intersect over two full shingle arrays — AQE's

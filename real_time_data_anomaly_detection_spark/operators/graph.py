@@ -33,6 +33,7 @@ from pyspark.sql import functions as F
 
 from real_time_data_anomaly_detection_spark.io import load_table
 from real_time_data_anomaly_detection_spark.operators.registry import query
+from real_time_data_anomaly_detection_spark.plans.inspect import checkpoint_if_small
 
 DAMPING = 0.85
 
@@ -300,18 +301,13 @@ def q_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
     wedges concentrate on hubs; the a<b orientation (degree-ordering's
     cheap cousin) keeps per-key fan-out bounded by the smaller
     endpoint's degree."""
-    from real_time_data_anomaly_detection_spark.plans.inspect import plan_size_bytes
-
     li = load_table(spark, sf_dir, "lineitem")
-    os_ = li.select("l_orderkey", "l_suppkey").distinct()
     # The wedge join consumes os_ on BOTH sides, and Catalyst re-inlines
     # the subtree per consumer — without materialization the scan +
-    # distinct exchange run twice inside the edge-set fill job. Same
-    # size gate as dedup.minhash_neardup_pairs' arr relation: above the
-    # estimate a second codegen'd scan beats materializing a
-    # corpus-sized distinct.
-    if plan_size_bytes(li) <= 1 << 30:
-        os_ = os_.localCheckpoint(eager=True)
+    # distinct exchange run twice inside the edge-set fill job.
+    os_ = checkpoint_if_small(
+        li.select("l_orderkey", "l_suppkey").distinct(), li
+    )
     x, y = os_.alias("x"), os_.alias("y")
     edges = (
         x.join(

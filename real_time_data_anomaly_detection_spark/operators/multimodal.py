@@ -33,6 +33,11 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from real_time_data_anomaly_detection_spark.plans.inspect import (
+    broadcast_if_small,
+    checkpoint_if_small,
+)
+
 MEDIA_SCHEMA = T.StructType(
     [
         T.StructField("media_id", T.LongType(), False),
@@ -1639,8 +1644,12 @@ def video_frame_dhash(
     return df.select(id_col, payload_col).mapInPandas(_hash, schema)
 
 
+# above this many distinct batch band keys the index scan runs unpruned
+PRUNE_KEYS_MAX = 100_000
+
+
 def _bk_prune_inlist(
-    idx: DataFrame, bands: DataFrame, prune_keys_max: int
+    idx: DataFrame, bands: DataFrame, prune_keys_max: int = PRUNE_KEYS_MAX
 ) -> DataFrame:
     """The two-hop-keys index prune, shared by image_index_match /
     video_index_match — with the round-13 construction fix: the
@@ -1724,9 +1733,6 @@ def _index_match(
     hash_w: int,
     hash_h: int,
     n_bands: int | None,
-    broadcast_batch: bool | None,
-    max_broadcast_bytes: int,
-    prune_keys_max: int,
 ) -> DataFrame:
     """The matcher core of image_index_match / video_index_match:
     (idx_id, ``new_id``, *extra_cols, hamming ≤ max_hamming) for every
@@ -1734,30 +1740,27 @@ def _index_match(
 
     The batch side is ``fps`` (an already-materialized (id, *extra,
     dhash) relation) or ``dhash_fn(batch, ...)``. One materialization
-    rule: a decode here takes the size-gated eager localCheckpoint
-    (decode once for the prune probe and the join; above 1 GB of batch
-    input recompute wins); caller-passed ``fps`` is used as is, never
-    re-materialized. The bk IN-list prune (_bk_prune_inlist) runs only
-    on a materialized hash relation — on an unmaterialized one the
-    probe would itself re-run the decode, and a batch that big blows
-    past prune_keys_max anyway. The band rows broadcast to the index
-    side below ``max_broadcast_bytes`` of batch input (above, a
-    shuffle join instead of an executor-OOM broadcast)."""
-    from real_time_data_anomaly_detection_spark.plans.inspect import plan_size_bytes
-
+    rule: a decode here goes through checkpoint_if_small on the batch
+    input (decode once for the prune probe and the join);
+    caller-passed ``fps`` is used as is, never re-materialized. The bk
+    IN-list prune (_bk_prune_inlist) runs only on a materialized hash
+    relation — on an unmaterialized one the probe would itself re-run
+    the decode, and a batch that big blows past PRUNE_KEYS_MAX anyway.
+    The band rows go through broadcast_if_small, sized on the batch
+    input (or on ``fps`` when no batch is given)."""
     nbits = hash_w * hash_h
     if n_bands is None:
         n_bands = _default_bands(nbits, max_hamming)
-    size = plan_size_bytes(batch if batch is not None else fps)
-    if broadcast_batch is None:
-        broadcast_batch = size <= max_broadcast_bytes
+    src = batch if batch is not None else fps
     materialized = fps is not None
     if fps is None:
-        fps = dhash_fn(batch, payload_col, id_col, hash_w, hash_h)
-    fps = fps.filter(F.col("dhash").isNotNull())
-    if not materialized and size <= 1 << 30:
-        fps = fps.localCheckpoint(eager=True)
-        materialized = True
+        decoded = dhash_fn(batch, payload_col, id_col, hash_w, hash_h).filter(
+            F.col("dhash").isNotNull()
+        )
+        fps = checkpoint_if_small(decoded, batch)
+        materialized = fps is not decoded
+    else:
+        fps = fps.filter(F.col("dhash").isNotNull())
     b = _band_fps(fps, id_col, nbits, n_bands, extra_cols).select(
         F.col(id_col).alias(new_id), *extra_cols, F.col("dhash").alias("h_new"), "bk"
     )
@@ -1765,11 +1768,10 @@ def _index_match(
         F.col(id_col).alias("idx_id"), F.col("dhash").alias("h_idx"), "bk"
     )
     if materialized:
-        idx = _bk_prune_inlist(idx, b, prune_keys_max)
-    right = F.broadcast(b) if broadcast_batch else b
+        idx = _bk_prune_inlist(idx, b)
     hamming = F.bit_count(F.col("h_idx").bitwiseXOR(F.col("h_new")))
     return (
-        idx.join(right, "bk")
+        idx.join(broadcast_if_small(b, src), "bk")
         .select("idx_id", new_id, *extra_cols, hamming.alias("hamming"))
         .distinct()
         .filter(F.col("hamming") <= max_hamming)
@@ -1785,9 +1787,6 @@ def video_index_match(
     hash_w: int = 8,
     hash_h: int = 8,
     n_bands: int | None = None,
-    broadcast_batch: bool | None = None,
-    max_broadcast_bytes: int = 64 << 20,
-    prune_keys_max: int = 100_000,
     fps: DataFrame | None = None,
 ) -> DataFrame:
     """Cross-media near-dup (round-11): match every FRAME of a new
@@ -1806,12 +1805,11 @@ def video_index_match(
 
     ``fps``: pass the already-materialized (id, frame_idx, dhash)
     relation (e.g. video_frame_dhash_cached) and the decode +
-    localCheckpoint are skipped entirely; ``batch_videos`` may then
-    be None and the broadcast valve sizes on the hash relation."""
+    checkpoint are skipped entirely; ``batch_videos`` may then be
+    None and the broadcast valve sizes on the hash relation."""
     return _index_match(
         index_bands, batch_videos, fps, video_frame_dhash, "video_id",
-        ("frame_idx",), payload_col, id_col, max_hamming, hash_w, hash_h,
-        n_bands, broadcast_batch, max_broadcast_bytes, prune_keys_max,
+        ("frame_idx",), payload_col, id_col, max_hamming, hash_w, hash_h, n_bands,
     )
 
 
@@ -1888,7 +1886,7 @@ def video_neardup_pairs(
 
     ``fps``: pass the already-materialized (id, frame_idx, dhash)
     relation (e.g. video_frame_dhash_cached) to skip the decode and
-    the localCheckpoint (the cache parquet re-scans cheaply)."""
+    the checkpoint (the cache parquet re-scans cheaply)."""
     nbits = hash_w * hash_h
     if n_bands is None:
         n_bands = _default_bands(nbits, max_hamming)
@@ -1896,7 +1894,8 @@ def video_neardup_pairs(
         fps = video_frame_dhash(
             videos, payload_col, id_col, hash_w, hash_h
         ).filter(F.col("dhash").isNotNull())
-        fps = fps.localCheckpoint(eager=True)  # decode once: counts + join
+        # decode once: the frame counts and the self-join both read it
+        fps = checkpoint_if_small(fps, videos)
     else:
         fps = fps.filter(F.col("dhash").isNotNull())
     n_frames = fps.groupBy(id_col).agg(
@@ -1959,8 +1958,6 @@ def video_neardup_admit(
     hash_w: int = 8,
     hash_h: int = 8,
     n_bands: int | None = None,
-    broadcast_batch: bool | None = None,
-    max_broadcast_bytes: int = 64 << 20,
     fps: DataFrame | None = None,
 ) -> DataFrame:
     """Frame-coverage admission for a video batch (round-11 — the
@@ -1989,39 +1986,28 @@ def video_neardup_admit(
     relation (null rows included) so video_ingest_stream pays the
     container+JPEG decode ONCE per trigger; ``batch_videos`` may then
     be None and the broadcast valve sizes on the hash relation."""
-    from real_time_data_anomaly_detection_spark.plans.inspect import (
-        plan_size_bytes,
-    )
-
     nbits = hash_w * hash_h
     if n_bands is None:
         n_bands = _default_bands(nbits, max_hamming)
-    if broadcast_batch is None:
-        # the image twins' valve: micro-batches broadcast (the index
-        # side never shuffles); a backfill-sized batch degrades to a
-        # shuffle join instead of an executor-OOM broadcast
-        broadcast_batch = plan_size_bytes(
-            batch_videos if batch_videos is not None else fps
-        ) <= max_broadcast_bytes
+    src = batch_videos if batch_videos is not None else fps
     if fps is None:
-        fps = video_frame_dhash(
-            batch_videos, payload_col, id_col, hash_w, hash_h
+        fps = checkpoint_if_small(
+            video_frame_dhash(batch_videos, payload_col, id_col, hash_w, hash_h),
+            batch_videos,
         )
-        if plan_size_bytes(batch_videos) <= 1 << 30:
-            fps = fps.localCheckpoint(eager=True)
     good = fps.filter(F.col("dhash").isNotNull())
     banded = _band_fps(good, id_col, nbits, n_bands, extra_cols=("frame_idx",))
-    maybe_bc = F.broadcast if broadcast_batch else (lambda x: x)
     new_side = banded.select(
         F.col(id_col).alias("_vid"),
         F.col("frame_idx").alias("_fidx"),
         F.col("dhash").alias("h_new"),
         "bk",
     )
-    # covered-by-index frames
+    # covered-by-index frames; the batch side broadcasts (the index
+    # side never shuffles) unless the batch is backfill-sized
     hit_idx = (
         index_bands.select(F.col("dhash").alias("h_idx"), "bk")
-        .join(maybe_bc(new_side), "bk")
+        .join(broadcast_if_small(new_side, src), "bk")
         .filter(
             F.bit_count(F.col("h_idx").bitwiseXOR(F.col("h_new")))
             <= max_hamming
@@ -2404,16 +2390,12 @@ def image_neardup_pairs(
         F.col("dhash").isNotNull()
     )
     # Both self-join sides consume fps — without a materialization the
-    # Python DECODE subplan evaluates twice (the size-gated
-    # localCheckpoint house pattern; the checkpointed relation is
-    # (id, hash), 16 B/row, never payloads). Gate on the INPUT
+    # Python DECODE subplan evaluates twice (the checkpointed relation
+    # is (id, hash), 16 B/row, never payloads). Gate on the INPUT
     # estimate: payload relations outgrow the gate long before the
     # hash relation matters, and above it a 100 TB deployment should
     # persist hashes to a table instead.
-    from real_time_data_anomaly_detection_spark.plans.inspect import plan_size_bytes
-
-    if plan_size_bytes(df) <= 1 << 30:
-        fps = fps.localCheckpoint(eager=True)
+    fps = checkpoint_if_small(fps, df)
     banded = _band_fps(fps, id_col, nbits, n_bands)
     a = banded.select(
         F.col(id_col).alias("img_a"), F.col("dhash").alias("h_a"), "bk"
@@ -2648,17 +2630,13 @@ def image_index_match(
     hash_w: int = 8,
     hash_h: int = 8,
     n_bands: int | None = None,
-    broadcast_batch: bool | None = None,
-    max_broadcast_bytes: int = 64 << 20,
-    prune_keys_max: int = 100_000,
 ) -> DataFrame:
     """Match a NEW image batch against a persisted index: pairs
     (idx_id, new_id, hamming ≤ max_hamming). The batch decodes once
-    (size-gated localCheckpoint on the 16 B/row hash relation), its
-    band rows broadcast to the index side (size-gated like
-    ingest_dedup's valve — above the gate it degrades to a shuffle
-    join), and when the batch holds ≤ ``prune_keys_max`` distinct band
-    keys they are pushed as a bk IN-list into the index scan — the
+    (checkpoint_if_small on the 16 B/row hash relation), its band
+    rows go through broadcast_if_small to the index side, and when
+    the batch holds ≤ PRUNE_KEYS_MAX distinct band keys they are
+    pushed as a bk IN-list into the index scan — the
     two-hop-keys trick: because build_image_index sorted by bk,
     parquet row-group stats skip everything the batch can't touch, so
     per-trigger cost scales with the BATCH, not the corpus. The
@@ -2671,7 +2649,6 @@ def image_index_match(
     return _index_match(
         index_bands, batch_images, None, image_dhash, "new_id", (),
         payload_col, id_col, max_hamming, hash_w, hash_h, n_bands,
-        broadcast_batch, max_broadcast_bytes, prune_keys_max,
     )
 
 
@@ -2684,8 +2661,6 @@ def image_neardup_admit(
     hash_w: int = 8,
     hash_h: int = 8,
     n_bands: int | None = None,
-    broadcast_batch: bool | None = None,
-    max_broadcast_bytes: int = 64 << 20,
     fps: DataFrame | None = None,
 ) -> DataFrame:
     """Admission decision for a new image batch against everything
@@ -2718,30 +2693,26 @@ def image_neardup_admit(
     nbits = hash_w * hash_h
     if n_bands is None:
         n_bands = _default_bands(nbits, max_hamming)
-    from real_time_data_anomaly_detection_spark.plans.inspect import plan_size_bytes
-
-    if broadcast_batch is None:
-        # the ingest_dedup valve: micro-batches broadcast (the index
-        # side never shuffles); a backfill-sized batch degrades to a
-        # shuffle join instead of an executor-OOM broadcast
-        broadcast_batch = plan_size_bytes(batch_images) <= max_broadcast_bytes
     if fps is None:
-        fps = image_dhash(batch_images, payload_col, id_col, hash_w, hash_h)
-        if plan_size_bytes(batch_images) <= 1 << 30:
-            fps = fps.localCheckpoint(eager=True)
+        fps = checkpoint_if_small(
+            image_dhash(batch_images, payload_col, id_col, hash_w, hash_h),
+            batch_images,
+        )
     all_fps = fps
     fps = all_fps.filter(F.col("dhash").isNotNull())
     banded = _band_fps(fps, id_col, nbits, n_bands)
-    maybe_bc = F.broadcast if broadcast_batch else (lambda x: x)
     idx = index_bands.select(
         F.col("dhash").alias("h_idx"), "bk"
     )
+    # the batch side broadcasts (the index side never shuffles) unless
+    # the batch is backfill-sized
     hit_idx = (
         idx.join(
-            maybe_bc(
+            broadcast_if_small(
                 banded.select(
                     F.col(id_col).alias("_nid"), F.col("dhash").alias("h_new"), "bk"
-                )
+                ),
+                batch_images,
             ),
             "bk",
         )

@@ -26,6 +26,7 @@ from pyspark.sql import functions as F
 
 from real_time_data_anomaly_detection_spark.io import load_table
 from real_time_data_anomaly_detection_spark.operators.registry import query
+from real_time_data_anomaly_detection_spark.plans.inspect import checkpoint_if_small
 
 
 def _md5_u32(col: Column, prefix: Column | None = None) -> Column:
@@ -172,9 +173,8 @@ def q_countmin_freq(spark: SparkSession, sf_dir: str) -> DataFrame:
     at the 20 exact-top tokens; output (token, exact_n, cms_est) with
     cms_est ≥ exact_n guaranteed. Oracle replays the identical md5
     bucketing and min-of-rows estimate."""
-    toks = load_table(spark, sf_dir, "documents").select(
-        F.explode(F.split("text", " ")).alias("token")
-    )
+    docs = load_table(spark, sf_dir, "documents")
+    toks = docs.select(F.explode(F.split("text", " ")).alias("token"))
     # One tokenize+count pass feeds EVERYTHING downstream: the exact
     # relation is vocab-sized, and the sketch counters are the same
     # sums whether accumulated per occurrence or per (token, count)
@@ -183,10 +183,9 @@ def q_countmin_freq(spark: SparkSession, sf_dir: str) -> DataFrame:
     # every consumer (6 parquet scans: sketch build, probe ranking,
     # probe-side estimate, final join); now the corpus is scanned
     # ONCE and md5 runs per distinct token, not per occurrence.
-    exact = (
-        toks.groupBy("token")
-        .agg(F.count(F.lit(1)).alias("exact_n"))
-        .localCheckpoint(eager=True)
+    exact = checkpoint_if_small(
+        toks.groupBy("token").agg(F.count(F.lit(1)).alias("exact_n")),
+        docs,
     )
     probes = exact.orderBy(F.desc("exact_n"), "token").limit(20)
     sketch = countmin_build_from_counts(exact, "token", "exact_n", depth=4, width=256)
@@ -335,7 +334,7 @@ def q_hll_md5(spark: SparkSession, sf_dir: str) -> DataFrame:
     # distinct-then-count anyway, and skips NULLs like the oracle's
     # count(DISTINCT)). The checkpoint stops Catalyst re-inlining the
     # scan + distinct under every consumer (6 parquet scans before).
-    dist = li.distinct().localCheckpoint(eager=True)
+    dist = checkpoint_if_small(li.distinct(), li)
     est = hll_estimate(dist, "l_partkey", ["l_returnflag"], p=6)
     exact = dist.groupBy("l_returnflag").agg(
         F.count("l_partkey").alias("exact_nd")

@@ -1,14 +1,24 @@
-"""Assertions over Spark physical plans.
+"""Assertions over Spark physical plans, and the house size policy.
 
-These make scale properties TESTABLE: "the dimension join broadcasts",
-"the filter reached the parquet scan", "this pipeline shuffles once" —
-the difference between working-at-sf0.01 and working-at-100TB. Used by
-tests/test_plans.py and available for ad-hoc plan review.
+The assertions make scale properties TESTABLE: "the dimension join
+broadcasts", "the filter reached the parquet scan", "this pipeline
+shuffles once" — the difference between working-at-sf0.01 and
+working-at-100TB. Used by tests/test_plans.py and available for ad-hoc
+plan review.
+
+The size policy is the one place that reads Catalyst's sizeInBytes
+estimate (:func:`plan_size_bytes`) to decide a materialization or a
+broadcast: every operator goes through :func:`checkpoint_if_small` and
+:func:`broadcast_if_small` instead of comparing estimates itself.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
+
+CHECKPOINT_MAX_BYTES = 1 << 30
+BROADCAST_MAX_BYTES = 64 << 20
 
 
 def formatted_plan(df: DataFrame) -> str:
@@ -134,10 +144,10 @@ def partitionless_windows(df) -> list[str]:
 
 def plan_size_bytes(df) -> int:
     """Catalyst's sizeInBytes estimate for a DataFrame's optimized
-    plan, or 2^60 when unavailable — the input to size-gated
-    localCheckpoint decisions. py4j returns the underlying BigInt as a
-    Python int on current pyspark; older versions handed back a JVM
-    object needing .toString() — handle both, because the AttributeError
+    plan, or 2^60 when unavailable — the input to the size policy
+    below. py4j returns the underlying BigInt as a Python int on
+    current pyspark; older versions handed back a JVM object needing
+    .toString() — handle both, because the AttributeError
     from assuming one form silently disabled EVERY size gate (the
     checkpoint never fired and nobody noticed until a plan audit found
     zero ExistingRDD scans)."""
@@ -146,6 +156,37 @@ def plan_size_bytes(df) -> int:
         return raw if isinstance(raw, int) else int(raw.toString())
     except Exception:  # estimate unavailable → assume big, recompute
         return 1 << 60
+
+
+def checkpoint_if_small(df: DataFrame, size_of: DataFrame):
+    """An eager ``localCheckpoint`` of ``df`` when the estimate of
+    ``size_of`` is at most 1 GB, else ``df`` unchanged — callers
+    compare identity to learn which branch ran. Used where one derived
+    relation feeds several consumers and Catalyst would re-inline its
+    subplan under each; ``size_of`` is typically the scanned input,
+    whose estimate is known before anything runs.
+
+    Above 1 GB a recompute beats materializing a corpus-sized relation
+    (the checkpoint costs more storage traffic than another codegen'd
+    pass). An unknown estimate (2^60 here, Long.MaxValue from Spark for
+    in-memory relations) counts as big. The only eager checkpoints
+    outside this helper are bounded by construction: pagerank's final
+    rank vector (taken before its caches are released) and the two
+    per-trigger decodes in streaming/ingest.py (one trigger's input)."""
+    if plan_size_bytes(size_of) > CHECKPOINT_MAX_BYTES:
+        return df
+    return df.localCheckpoint(eager=True)
+
+
+def broadcast_if_small(df: DataFrame, size_of: DataFrame):
+    """``F.broadcast(df)`` when the estimate of ``size_of`` is at most
+    64 MB, else ``df`` — the small side of a batch-vs-corpus join ships
+    to the big side's tasks so the corpus never shuffles, and a
+    backfill-sized batch degrades to a shuffle join. A broadcast above
+    64 MB risks executor OOM; an unknown estimate counts as big."""
+    if plan_size_bytes(size_of) > BROADCAST_MAX_BYTES:
+        return df
+    return F.broadcast(df)
 
 
 def executed_file_scans(df) -> int:

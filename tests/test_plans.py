@@ -276,7 +276,109 @@ def test_partitionless_windows_whitelisted_registry_wide(spark):
     assert not offenders, offenders
 
 
-def test_size_gated_checkpoint_fires(spark):
+def _python_under_range_sort(df) -> list[str]:
+    """Python-evaluating nodes (EvalPython / MapIn*) between a range
+    exchange and the nearest boundary below it — an Exchange, a
+    checkpoint's ExistingRDD scan, or a cached relation. A global
+    orderBy first runs a SAMPLING job over its child to pick range
+    bounds, then executes the child again for the shuffle, so any
+    Python pass in that span (decode, score) runs twice. Same py4j
+    tree walk as plans.inspect.partitionless_windows."""
+    out: list[str] = []
+
+    def children(node):
+        ch = node.children()
+        return [ch.apply(i) for i in range(ch.size())]
+
+    def below(node) -> None:
+        cname = node.getClass().getSimpleName()
+        if (
+            "Exchange" in cname
+            or cname == "RDDScanExec"
+            or cname.startswith("InMemoryTableScan")
+        ):
+            return
+        if "EvalPython" in cname or cname.startswith("MapIn"):
+            out.append(cname)
+        for c in children(node):
+            below(c)
+
+    def walk(node) -> None:
+        cname = node.getClass().getSimpleName()
+        if cname.startswith("InMemoryTableScan"):
+            return
+        if cname == "AdaptiveSparkPlanExec":
+            walk(node.initialPlan())
+            return
+        if (
+            cname == "ShuffleExchangeExec"
+            and node.outputPartitioning().getClass().getSimpleName()
+            == "RangePartitioning"
+        ):
+            for c in children(node):
+                below(c)
+        for c in children(node):
+            walk(c)
+
+    walk(df._jdf.queryExecution().executedPlan())
+    return out
+
+
+def test_range_sorts_bounded_registry_wide(spark):
+    """OPTIMIZATION_r14's range-sampling sweep as a registry-wide pin:
+    no global sort may re-run a Python decode/score pass for its
+    sampling job (q_video_dhash_md5 paid 2.14 s for 0.98 s of decode
+    before its lazy localCheckpoint). Same loop as the partition-less
+    window pin, plus the iterative/index-building queries post-build —
+    two of the five fixed sorts (q_pca_project, q_quality_classifier)
+    live there."""
+    offenders = {}
+    for name, q in sorted(REGISTRY.items()):
+        nodes = _python_under_range_sort(q.spark_fn(spark, SF_DIR))
+        if nodes:
+            offenders[name] = nodes
+    assert not offenders, offenders
+
+
+# Every query whose plan takes a checkpoint_if_small materialization
+# (plans.inspect) — directly or through the operator it wraps.
+GATED_CHECKPOINT_QUERIES = (
+    "q_countmin_freq",
+    "q_hll_md5",
+    "q_tfidf",
+    "q_cdc_apply",
+    "q_exact_substring_dedup",
+    "q_minhash_neardup",
+    "q_prefix_jaccard",
+    "q_triangles",
+    "q_image_neardup_md5",
+    "q_video_neardup_md5",
+)
+
+
+def _executed_tree(df) -> str:
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
+def _count_eager_checkpoints(spark, monkeypatch) -> list:
+    """Spy on eager localCheckpoint calls; returns the (growing) list of
+    checkpointed DataFrames. q_triangles needs it: its result is two
+    driver-side scalars, so no plan shows the checkpoint it took (every
+    other gated query is checked by its plan's ExistingRDD scan)."""
+    cls = type(spark.range(1))
+    orig = cls.localCheckpoint
+    calls: list = []
+
+    def spy(self, eager=True, *args, **kwargs):
+        if eager:
+            calls.append(self)
+        return orig(self, eager, *args, **kwargs)
+
+    monkeypatch.setattr(cls, "localCheckpoint", spy)
+    return calls
+
+
+def test_size_gated_checkpoint_fires(spark, monkeypatch):
     """The size-gated localCheckpoint must actually FIRE for small
     inputs: pyspark's stats().sizeInBytes() started returning a plain
     int, so the old `.toString()` call raised AttributeError and the
@@ -284,25 +386,59 @@ def test_size_gated_checkpoint_fires(spark):
     consumer relations (minhash arr, prefix arr, exact-substring
     grams) recomputed their corpus subplan per consumer (q_prefix_
     jaccard re-ran the scan+shingle chain serially, +4-6 s at sf0.1).
-    Pin both the estimator and the checkpoint's presence in the plan."""
-    from real_time_data_anomaly_detection_spark.operators.dedup import (
-        minhash_neardup_pairs,
-        prefix_filter_jaccard,
-    )
+    Pin both the estimator and, for every gated query, the checkpoint's
+    ExistingRDD scan in its executed plan — a gate that checkpoints but
+    hands back the un-checkpointed relation fails here."""
     from real_time_data_anomaly_detection_spark.plans.inspect import (
         plan_size_bytes,
     )
-
-    from real_time_data_anomaly_detection_spark.io import load_table
 
     # must be a FILE source: in-memory relations report Long.MaxValue
     # (unknown) and correctly fall to the recompute branch
     d = load_table(spark, SF_DIR, "documents")
     est = plan_size_bytes(d)
     assert 0 < est < (1 << 30), est
-    for q in (minhash_neardup_pairs(d), prefix_filter_jaccard(d)):
-        plan = q._jdf.queryExecution().executedPlan().toString()
-        assert "ExistingRDD" in plan, "checkpoint missing from plan"
+    missing = [
+        name
+        for name in GATED_CHECKPOINT_QUERIES
+        if name != "q_triangles"
+        and "ExistingRDD"
+        not in _executed_tree(REGISTRY[name].spark_fn(spark, SF_DIR))
+    ]
+    assert not missing, f"checkpoint missing from plan: {missing}"
+    calls = _count_eager_checkpoints(spark, monkeypatch)
+    REGISTRY["q_triangles"].spark_fn(spark, SF_DIR)
+    assert calls, "q_triangles took no checkpoint"
+
+
+def test_size_gated_checkpoint_above_gate_recomputes(spark, monkeypatch):
+    """The other branch of the same gate: with every estimate above
+    1 GB no gated query may materialize — no eager checkpoint, no
+    ExistingRDD scan in its plan — and each must return exactly the
+    rows of its checkpointed run. Catches an eager checkpoint that
+    bypasses the gate, as the q_countmin_freq, q_hll_md5 and
+    video_neardup_pairs checkpoints once did."""
+    from real_time_data_anomaly_detection_spark.plans import inspect
+
+    def run():
+        out = {}
+        for name in GATED_CHECKPOINT_QUERIES:
+            df = REGISTRY[name].spark_fn(spark, SF_DIR)
+            rows = sorted(map(tuple, df.collect()), key=repr)
+            out[name] = ("ExistingRDD" in _executed_tree(df), rows)
+        return out
+
+    gated = run()
+    # q_triangles' result is driver scalars: its checkpoint shows in no plan
+    assert [n for n, (m, _) in gated.items() if not m] == ["q_triangles"]
+    monkeypatch.setattr(inspect, "plan_size_bytes", lambda df: 2 << 30)
+    calls = _count_eager_checkpoints(spark, monkeypatch)
+    above = run()
+    assert calls == []
+    assert [n for n, (m, _) in above.items() if m] == []
+    assert {n: r for n, (_, r) in above.items()} == {
+        n: r for n, (_, r) in gated.items()
+    }
 
 
 def test_dynamic_partition_pruning_fires(spark, tmp_path):
@@ -411,28 +547,43 @@ def test_ingest_dedup_corpus_never_shuffles(spark):
     assert plan.count("LessThan(doc_id,400)") == 1
 
 
-def test_ingest_dedup_shuffle_fallback_matches_broadcast(spark):
+def test_ingest_dedup_shuffle_fallback_matches_broadcast(spark, monkeypatch):
     """Round-8 verdict #1: an unbroadcastable batch must degrade to
     key-keyed shuffle joins, not silently plan a corpus-side
     broadcast of a huge relation — and the two regimes must admit
-    IDENTICAL rows. broadcast_keys=False forces the fallback; the
-    plan must then contain no BroadcastHashJoin on the dedup hops."""
-    from real_time_data_anomaly_detection_spark.io import load_table
+    IDENTICAL rows. An estimate above the 64 MB broadcast valve
+    (plan_size_bytes monkeypatched) forces the fallback; the plan
+    must then contain no BroadcastHashJoin on the dedup hops. The
+    same valve sizes merge_upsert's and cdc_apply's change batch:
+    below it the snapshot anti-join broadcasts, above it no LeftAnti
+    plans as a BroadcastHashJoin, and the rows are the same."""
     from real_time_data_anomaly_detection_spark.operators.pipeline_ops import (
         _SYNTH_URL_SQL,
         ingest_dedup,
     )
-    from real_time_data_anomaly_detection_spark.plans.inspect import (
-        formatted_plan,
-    )
+    from real_time_data_anomaly_detection_spark.plans import inspect
 
     d = load_table(spark, "/root/testdata/sf0.001", "documents")
     u = d.select("doc_id", "text", F.expr(_SYNTH_URL_SQL).alias("url"))
     corpus = u.filter(F.col("doc_id") < 400)
     batch = u.filter(F.col("doc_id") >= 400)
-    bc_rows = sorted(
-        map(tuple, ingest_dedup(corpus, batch, broadcast_keys=True).collect())
-    )
+    merges = ("q_merge_upsert", "q_cdc_apply")
+
+    def build():
+        out = {"ingest_dedup": ingest_dedup(corpus, batch)}
+        for name in merges:
+            out[name] = REGISTRY[name].spark_fn(spark, SF_DIR)
+        return out
+
+    def bc_anti_joins(df) -> int:
+        return sum(
+            "BroadcastHashJoin" in ln and "LeftAnti" in ln
+            for ln in _executed_tree(df).splitlines()
+        )
+
+    below = build()
+    assert all(bc_anti_joins(below[name]) for name in merges)
+    bc_rows = {k: sorted(map(tuple, v.collect())) for k, v in below.items()}
     # simulate backfill scale: kill the auto-broadcast thresholds so
     # the un-hinted fallback joins plan as they would on a batch that
     # genuinely exceeds them
@@ -446,10 +597,12 @@ def test_ingest_dedup_shuffle_fallback_matches_broadcast(spark):
     try:
         for k in saved:
             spark.conf.set(k, "-1")
-        sh = ingest_dedup(corpus, batch, broadcast_keys=False)
-        plan = formatted_plan(sh)
+        monkeypatch.setattr(inspect, "plan_size_bytes", lambda df: 2 << 30)
+        above = build()
+        plan = formatted_plan(above["ingest_dedup"])
         assert "SortMergeJoin" in plan or "ShuffledHashJoin" in plan
-        sh_rows = sorted(map(tuple, sh.collect()))
+        assert [bc_anti_joins(above[name]) for name in merges] == [0, 0]
+        sh_rows = {k: sorted(map(tuple, v.collect())) for k, v in above.items()}
     finally:
         for k, v in saved.items():
             if v is None:
